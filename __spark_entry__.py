@@ -2533,7 +2533,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # wet_roundtrip already in-window covers the warc.py write changes;
     # embedding_quantize/topk_int8 cover the similarity.py guard).
     # They displace 19 r04-green entries whose paths no r05 change
-    # touches (token_counts … boilerplate_lines — text_stats/langid/
+    # touches (token_counts … boilerplate_lines — text-analysis/langid/
     # dedup/curation paths, all untouched). Union of CORRECTNESS_r03 +
     # r04 + r05 then covers every query on current-generation code; the
     # committed local full-surface run re-proves the rotated-out set.

@@ -65,6 +65,20 @@ def force(df) -> int:
 
 
 def main() -> None:
+    # SPARK_GRAFT_ONLY="a,b,c": time just that subset and skip the
+    # pipeline/scaling probes — lets a short quiet window on this
+    # shared VM contribute min-merge trials for specific queries
+    # (tools/bench_merge.py) without paying the full ~13-minute line.
+    # Names are checked before Spark starts: a typo must fail loudly,
+    # not time an empty set.
+    only = [t.strip() for t in os.environ.get("SPARK_GRAFT_ONLY",
+                                              "").split(",") if t.strip()]
+    unknown = [t for t in only if t not in HEADLINE]
+    if unknown:
+        sys.exit(f"SPARK_GRAFT_ONLY: unknown headline queries: "
+                 f"{', '.join(unknown)}")
+    headline = [q for q in HEADLINE if q in only] if only else HEADLINE
+
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
@@ -85,13 +99,6 @@ def main() -> None:
     # 1.25-1.9× slower than r03 with none faster — window, not code).
     # Interleaving puts a query's two trials a full set-length (~80 s)
     # apart — the same estimator the committed scaling sweep uses.
-    # SPARK_GRAFT_ONLY="a,b,c": time just that subset and skip the
-    # pipeline/scaling probes — lets a short quiet window on this
-    # shared VM contribute min-merge trials for specific queries
-    # (tools/bench_merge.py) without paying the full ~13-minute line.
-    only = os.environ.get("SPARK_GRAFT_ONLY", "")
-    headline = ([q for q in HEADLINE if q in set(only.split(","))]
-                if only else HEADLINE)
     raw: dict[str, list[float]] = {name: [] for name in headline}
     for _pass in range(2):
         for name in headline:
@@ -155,11 +162,10 @@ def main() -> None:
     #
     # OUTPUT CONTRACT: the printed line must stay small (<~1 KB) — the
     # round-2 driver truncated a long line mid-JSON and lost the round's
-    # timings. So only the efficiency SCALARS are printed; the full probe
-    # record (trials, docs/sec per size, committed-sweep copy) goes to
-    # BENCH/scaling_live_latest.json. SPARK_GRAFT_SKIP_SCALING=1 skips
-    # the live probe entirely (the committed sweep is the canonical
-    # evidence; the live probe is a per-round sanity signal).
+    # timings. So only the efficiency SCALARS are printed, and no file
+    # is written. SPARK_GRAFT_SKIP_SCALING=1 skips the live probe
+    # entirely (the committed sweep is the canonical evidence; the live
+    # probe is a per-round sanity signal).
     here = os.path.dirname(os.path.abspath(__file__))
     scaling = None
     if os.environ.get("SPARK_GRAFT_SKIP_SCALING", "") != "1":
@@ -200,48 +206,28 @@ def main() -> None:
         except Exception as e:  # never let the probe kill the bench
             scaling = {"error": str(e)[:300]}
 
-    # Full probe record + committed-sweep copy → file, not stdout.
-    detail_path = os.path.join(here, "BENCH", "scaling_live_latest.json")
-    eff_full = eff_models = eff_1to4 = eff_2to8_committed = None
-    try:
-        detail = {"live_probe": scaling,
-                  "note": ("live probe = one shared-VM window, "
-                           "steal-sensitive; the newest committed "
-                           "interleaved six-size min-of-trials sweep in "
-                           "BENCH/scaling_r0N.json (reproducible via its "
-                           "embedded command) is the canonical evidence")}
-        # Prefer the newest committed canonical sweep (r05 runs on the
-        # fingerprinted corpus — the documented 100-TB ingest layout).
-        for sweep_name in ("scaling_r05.json", "scaling_r04.json"):
-            try:
-                with open(os.path.join(here, "BENCH", sweep_name)) as f:
-                    ref = json.load(f)
-                detail["committed_sweep"] = {
-                    "source": sweep_name,
-                    "n_to_4n_pairs": ref.get("n_to_4n_pairs"),
-                    "amdahl_fit": ref.get("amdahl_fit"),
-                    "command": ref.get("command")}
-                break
-            except Exception:
-                continue
-        os.makedirs(os.path.dirname(detail_path), exist_ok=True)
-        with open(detail_path, "w") as f:
-            json.dump(detail, f, indent=1)
-        if scaling and "full" in scaling:
-            eff_full = scaling["full"].get("scaling_efficiency")
-            eff_models = (scaling.get("models") or {}).get(
-                "scaling_efficiency")
-        if "committed_sweep" in detail:
-            pair = detail["committed_sweep"]["n_to_4n_pairs"]["2to8"]
-            eff_2to8_committed = pair["full"]["efficiency"]
+    eff_full = eff_models = None
+    if scaling and "full" in scaling:
+        eff_full = scaling["full"].get("scaling_efficiency")
+        eff_models = (scaling.get("models") or {}).get("scaling_efficiency")
+
+    # Prefer the newest committed canonical sweep (r05 runs on the
+    # fingerprinted corpus — the documented 100-TB ingest layout).
+    eff_1to4 = eff_2to8_committed = None
+    for sweep_name in ("scaling_r05.json", "scaling_r04.json"):
+        try:
+            with open(os.path.join(here, "BENCH", sweep_name)) as f:
+                pairs = json.load(f)["n_to_4n_pairs"]
             # the canonical north-rule pair: 1→4 cores is the largest
             # N→4N step whose aggregate traffic fits this shared VM's
             # DRAM ceiling now that the vectorized UDFs moved the
             # single-core baseline ~1.8× (see BENCH/BASELINE.md)
-            p14 = detail["committed_sweep"]["n_to_4n_pairs"]["1to4"]
-            eff_1to4 = p14["full"]["efficiency"]
-    except Exception:
-        pass
+            eff_2to8_committed, eff_1to4 = (
+                pairs["2to8"]["full"]["efficiency"],
+                pairs["1to4"]["full"]["efficiency"])
+            break
+        except (OSError, ValueError, KeyError, TypeError):
+            continue
 
     total = round(sum(timings.values()), 2)
     print(json.dumps({
@@ -255,13 +241,15 @@ def main() -> None:
         "cpus": int(cpus),
         "trials_per_query": 2,
         "trial_scheme": "interleaved-passes-min",
-        # ONLY the canonical interleaved min-of-trials committed-sweep
-        # scalars are printed (method in BENCH/BASELINE.md). This run's
-        # single-window live probe is steal-sensitive and reads
-        # misleadingly low next to them (r03 verdict nit 3), so its
-        # record goes to BENCH/scaling_live_latest.json, not the line.
+        # The canonical interleaved min-of-trials committed-sweep
+        # scalars (method in BENCH/BASELINE.md) ...
         "eff_2to8_committed": eff_2to8_committed,
         "eff_1to4_committed": eff_1to4,
+        # ... and this run's 2→8 live probe. The live probe is one
+        # steal-sensitive window and reads low next to the committed
+        # sweep (r03 verdict nit 3); None when skipped or failed.
+        "eff_2to8_live_full": eff_full,
+        "eff_2to8_live_models": eff_models,
     }))
 
 

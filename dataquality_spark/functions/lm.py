@@ -122,60 +122,35 @@ def perplexity(texts: pd.Series) -> np.ndarray:
 
     Tokenization follows the engine-wide contract (split on ASCII
     whitespace). Empty/None text → NaN. Values rounded to SCORE_DECIMALS.
+    This is the oracle's scoring path: it tokenizes each document with
+    Python `tokenize`, independently of the fused UDF's Arrow word split,
+    and both feed the same flat-stream scorer.
     """
     from . import tokenize
 
-    vocab, _uni, _bk, _bc, _t = get_model()
-    get = vocab.get
-    vals = texts.to_numpy(dtype=object)
-    ids_list = []
-    for t in vals:
-        words = tokenize(t) if isinstance(t, str) else []
-        ids_list.append([get(w, -1) for w in words])
-    return perplexity_from_ids(ids_list)
-
-
-def perplexity_from_ids(ids_list: list[list[int]]) -> np.ndarray:
-    """Score pre-tokenized documents given per-doc vocab-id lists
-    (-1 = OOV). Callers that already iterate words (the fused pipeline
-    UDF) pass ids directly, so the token stream is built and traversed
-    exactly once per document.
-
-    Vectorized: all documents' ids are flattened once, bigram hits come
-    from np.searchsorted on the sorted key array, and per-document
-    log-prob sums use np.add.reduceat. Scoring semantics (stupid
-    backoff: bigram if seen, else backoff·unigram; OOV → backoff·add-k
-    floor; no context after document start or an OOV) are unchanged
-    from the per-token reference loop.
-    """
-    vocab, uni, bkeys, bcounts, total = get_model()
-    v = len(vocab)
-    denom = total + _ADD_K * (v + 1)
-    log_uni = np.log((uni + _ADD_K) / denom)
-    log_oov = math.log(_ADD_K / denom)
-    log_backoff = math.log(_BACKOFF)
-
-    lens = np.array([len(d) for d in ids_list], dtype=np.int64)
-    if not (lens > 0).any():
-        return np.full(len(ids_list), np.nan, dtype=np.float64)
-    total_tok = int(lens.sum())
-    ids = np.empty(total_tok, dtype=np.int64)
-    off = 0
-    for d in ids_list:
-        ln = len(d)
-        if ln:
-            ids[off:off + ln] = d
-            off += ln
-    return perplexity_from_flat(ids, lens)
+    get = get_model()[0].get
+    ids: list[int] = []
+    lens = np.zeros(len(texts), dtype=np.int64)
+    for i, t in enumerate(texts.to_numpy(dtype=object)):
+        if isinstance(t, str):
+            words = tokenize(t)
+            ids.extend(get(w, -1) for w in words)
+            lens[i] = len(words)
+    return perplexity_from_flat(np.asarray(ids, dtype=np.int64), lens)
 
 
 def perplexity_from_flat(ids: np.ndarray, lens: np.ndarray) -> np.ndarray:
-    """Same scorer over the PRE-FLATTENED token stream: `ids` is the
+    """Score documents given as a PRE-FLATTENED token stream: `ids` is the
     concatenation of every document's vocab ids in order (zero-length
     documents contribute nothing and score NaN), `lens` the per-doc
     token counts. The fused pipeline UDF produces this layout directly
-    from its Arrow word split, skipping the 10⁷-element list→int64
-    per-document flatten that dominated `perplexity_from_ids`."""
+    from its Arrow word split, so no per-document id lists are built.
+
+    Vectorized: bigram hits come from np.searchsorted on the sorted key
+    array and per-document log-prob sums use np.add.reduceat. Scoring
+    semantics (stupid backoff: bigram if seen, else backoff·unigram;
+    OOV → backoff·add-k floor; no context after document start or an
+    OOV) are unchanged from the per-token reference loop."""
     vocab, uni, bkeys, bcounts, total = get_model()
     v = len(vocab)
     denom = total + _ADD_K * (v + 1)

@@ -74,9 +74,7 @@ def sessionize(events: DataFrame, key: str, ts: str,
     time since the key's previous event exceeds the gap.
 
     Output adds `session_idx` (0-based per key, by time). One shuffle on
-    the key; the cumulative-sum window is linear per key partition. For
-    unbounded streams the stateful twin is
-    `applyInPandasWithState`/session windows in streaming/.
+    the key; the cumulative-sum window is linear per key partition.
     """
     w_order = Window.partitionBy(key).orderBy(ts)
     gap_us = int(gap_minutes * 60.0 * 1_000_000)

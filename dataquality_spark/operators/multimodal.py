@@ -22,9 +22,9 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (ArrayType, BinaryType, BooleanType, DoubleType,
-                               FloatType, IntegerType, LongType, StringType,
-                               StructField, StructType)
+from pyspark.sql.types import (ArrayType, BinaryType, DoubleType, FloatType,
+                               IntegerType, LongType, StringType, StructField,
+                               StructType)
 
 MEDIA_SCHEMA = StructType([
     StructField("media_id", LongType()),
@@ -221,51 +221,3 @@ def extract_features_fixed(df: DataFrame, dim: int = 16) -> DataFrame:
 
     return df.mapInPandas(_feat, FEATURES_FIXED_SCHEMA)
 
-
-def resize_images(df: DataFrame, max_dim: int = 256) -> DataFrame:
-    """Image resize stage: target dimensions computed from the metadata
-    (aspect-preserving clamp of the longest side to `max_dim`) with the
-    pixel transcode STUBBED — the payload passes through unchanged and
-    `resized` is False wherever a real decoder would have re-encoded.
-    On a codec-equipped image, replace the passthrough branch with
-    Pillow's resize; the schema and batch shape are production-real.
-
-    Input: MEDIA_SCHEMA joined with width/height (e.g. extract_metadata
-    output). Non-images pass through untouched with target == source.
-    """
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            tw, th, resized = [], [], []
-            for m, w, h in zip(pdf["modality"], pdf["width"],
-                               pdf["height"]):
-                if m != "image" or w <= 0 or h <= 0:
-                    tw.append(int(w)), th.append(int(h))
-                    resized.append(False)
-                    continue
-                scale = min(1.0, max_dim / max(int(w), int(h)))
-                tw.append(max(1, int(int(w) * scale)))
-                th.append(max(1, int(int(h) * scale)))
-                # STUB: a real decoder re-encodes payload here
-                resized.append(False)
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"],
-                "modality": pdf["modality"],
-                "payload": pdf["payload"],
-                "width": pd.array(pdf["width"], dtype="int32"),
-                "height": pd.array(pdf["height"], dtype="int32"),
-                "target_width": pd.array(tw, dtype="int32"),
-                "target_height": pd.array(th, dtype="int32"),
-                "resized": resized,
-            })
-
-    out_schema = StructType([
-        StructField("media_id", LongType()),
-        StructField("modality", StringType()),
-        StructField("payload", BinaryType()),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-        StructField("target_width", IntegerType()),
-        StructField("target_height", IntegerType()),
-        StructField("resized", BooleanType()),
-    ])
-    return df.mapInPandas(_resize, out_schema)

@@ -35,6 +35,14 @@ LM is that idea applied to text likelihood (SURVEY.md §0 graft).
   empties dropped), so a token can never contain a space and the
   bigram string "w1 w2" is losslessly split back with split_part —
   the property the DuckDB twin relies on.
+
+Exactness assumption: the lattice weight floor(scale * (ln(pair_n) -
+ln(ctx_n))) is exact only while the JVM's Math.log and DuckDB's libm
+`ln` return the same double. A value whose scaled log lands within one
+ULP of an integer would floor differently on the two engines if they
+disagreed in the last bit; no such case occurs on the contract corpus,
+but a new platform or libm could show one (same exposure as
+curation.dsir_importance).
 """
 
 from __future__ import annotations

@@ -39,11 +39,6 @@ def _cents(col) -> "F.Column":
     return F.round(F.col(col) * 100, 0).cast("long")
 
 
-def sum_exact(col, alias: str):
-    """Order-independent sum of a 2-dp double column (cents lattice)."""
-    return (F.sum(_cents(col)) / 100.0).alias(alias)
-
-
 def avg_exact(col, alias: str):
     """Order-independent mean of a 2-dp double column."""
     return (F.sum(_cents(col)) / 100.0 / F.count(col)).alias(alias)

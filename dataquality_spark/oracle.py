@@ -2,8 +2,8 @@
 
 A single-process, Spark-free implementation of the exact rule semantics
 the pipeline must reproduce. Heuristic rules are implemented here with
-plain Python/pandas string ops — independently of the Catalyst
-expressions in functions/text_stats.py — so the pipeline-vs-oracle tests
+plain Python/pandas string ops — independently of the Arrow kernels in
+the fused UDF (pipeline._batch_stats) — so the pipeline-vs-oracle tests
 are non-circular. The model-based scores (language ID, perplexity) and
 the regex scrub share their deterministic numpy/`re` cores with the
 pipeline's pandas UDFs by design: byte-identical scrub output and exact

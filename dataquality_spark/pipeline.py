@@ -31,9 +31,10 @@ consistency (CaseStudy.md:134-137), perplexity = accuracy
 Scale notes: the per-doc path has exactly ONE shuffle, and it carries
 only (url, warc_ts, crc32) — the document text never shuffles and crosses
 into Python exactly once. `html` is never read unless text extraction
-is requested — column pruning reaches the parquet/Iceberg scan. The
-standalone Catalyst stats expressions remain in functions/text_stats.py
-for the SQL-oracle-checkable operator surface.
+is requested — column pruning reaches the parquet/Iceberg scan. There
+is one implementation per stage: the per-doc stats exist only inside the
+fused UDF, and the pandas oracle (oracle.py) re-derives them
+independently.
 """
 
 from __future__ import annotations
@@ -80,51 +81,7 @@ _SYM_CHARS = C.SYMBOL_CHARS
 # ---------------------------------------------------------------------------
 # Pandas UDFs (Arrow-batched; models rebuilt lazily per executor —
 # deterministic, so no closure shipping / broadcast needed).
-#
-# langid_udf / perplexity_udf / scrub_udf are the UNFUSED stage UDFs:
-# the production path is the fused models_udf (one Arrow crossing, one
-# python worker per task), and tests/test_models.py::
-# test_standalone_udfs_equal_fused holds fused ≡ unfused as the fusion
-# regression oracle. They are also the composable single-stage surface
-# for pipelines that only need one model.
 # ---------------------------------------------------------------------------
-
-
-@pandas_udf(_LANGID_T)
-def langid_udf(text: pd.Series) -> pd.DataFrame:
-    from .functions import langid
-
-    pred, score = langid.score_texts(text)
-    return pd.DataFrame({"lang_pred": pred, "lang_score": score})
-
-
-@pandas_udf(DoubleType())
-def perplexity_udf(text: pd.Series, gate: pd.Series) -> pd.Series:
-    """Gated perplexity: NaN (→ SQL NULL) for docs already dropped."""
-    from .functions import lm
-
-    out = np.full(len(text), np.nan)
-    mask = gate.fillna(False).to_numpy(dtype=bool)
-    if mask.any():
-        out[mask] = lm.perplexity(text[mask])
-    # Nullable Float64 so ungated rows surface as SQL NULL, not NaN.
-    res = pd.array(out, dtype="Float64")
-    res[~mask | np.isnan(out)] = pd.NA
-    return pd.Series(res, index=text.index)
-
-
-@pandas_udf(_SCRUB_T)
-def scrub_udf(text: pd.Series) -> pd.DataFrame:
-    from .functions import scrub
-
-    scrubbed, hits = scrub.scrub_series(text)
-    return pd.DataFrame({
-        "text_scrubbed": scrubbed,
-        "pii_email": hits.map(lambda h: h.get("email", 0)).astype("int32"),
-        "pii_phone": hits.map(lambda h: h.get("phone", 0)).astype("int32"),
-        "pii_ipv4": hits.map(lambda h: h.get("ipv4", 0)).astype("int32"),
-        "pii_toxicity": hits.map(lambda h: h.get("toxicity", 0)).astype("int32"),
-    })
 
 
 def _batch_stats(text: pd.Series):
@@ -315,6 +272,18 @@ def extract_text_udf(html: pd.Series) -> pd.Series:
     extracted text equals the `text` column exactly. Real-world HTML
     extraction would slot in here; the wrapper strip keeps the Spark-side
     plumbing (binary column → Arrow → string) real and tested.
+
+    Why a Python UDF and not one JVM expression: extraction decodes
+    invalid UTF-8 with Python's `errors="replace"`, and no Spark 4.1
+    expression reproduces it byte for byte. On the bytes
+    61 C3 28 62 F0 9F 98 62 ED A0 80 63:
+      decode(h, 'UTF-8')  raises MALFORMED_CHARACTER_CODING
+      cast(h AS string)   'a\\ufffd(b\\ufffdb\\ufffdc'   (one U+FFFD per run)
+      Python "replace"    'a\\ufffd(b\\ufffdb\\ufffd\\ufffd\\ufffdc'
+    Python emits one U+FFFD per maximal invalid subpart (a surrogate
+    encoding ED A0 80 gives three); the JVM cast collapses them.
+    tests/test_pipeline_vs_oracle.py::test_html_extraction_byte_identity
+    pins the Python semantics end to end.
     """
     import re as _re
 
@@ -461,8 +430,7 @@ def dedup_flags(full_pages: DataFrame) -> DataFrame:
 
 def with_decisions(pages: DataFrame, extract_from_html: bool = False,
                    salt_repartition: int | None = None,
-                   dedup_scope: DataFrame | None = None,
-                   mark_dups: bool = True) -> DataFrame:
+                   dedup_scope: DataFrame | None = None) -> DataFrame:
     """Full per-document decision pipeline.
 
     Input: `pages` with (url, warc_ts, html, text, lang).
@@ -493,41 +461,33 @@ def with_decisions(pages: DataFrame, extract_from_html: bool = False,
         df = df.repartition(salt_repartition, "host", "_salt").drop("_salt")
 
     # S1 note: ALL per-doc text stats come back from the fused UDF —
-    # any JVM formulation is an extra pass over the text bytes. The
-    # standalone Catalyst versions live in functions/text_stats.py for
-    # the SQL-checkable operators.
+    # any JVM formulation is an extra pass over the text bytes.
 
     # S2: corpus-level url dedup — earliest (warc_ts, crc32) pair per url
     # wins. The aggregate sees only slim key columns; text stays put.
-    if not mark_dups:
-        # streaming path: unbounded dedup state is not allowed; dedup is
-        # handled upstream by watermarked dropDuplicates (streaming/).
-        df = df.withColumn("is_dup_url", F.lit(False)) \
-               .drop(C.FINGERPRINT_COL)
-    else:
-        # Runtime-adaptive join strategy: AQE cannot see through the
-        # count>1 filter's selectivity at the stage boundary, so left
-        # alone it sort-merge-joins — shuffling AND sorting every text
-        # row by url (measured ~half the pipeline wall time). Persist
-        # the slim flags, force them once with a count (no extra text
-        # scan — the join would have computed this branch anyway), and
-        # broadcast-hint when the dup-url set is small (the common
-        # crawl case). Past the threshold it degrades to the same
-        # shuffle join AQE would pick; caller releases the cache via
-        # caching.unpersist_all().
-        from .caching import track_persist
+    # Runtime-adaptive join strategy: AQE cannot see through the
+    # count>1 filter's selectivity at the stage boundary, so left
+    # alone it sort-merge-joins — shuffling AND sorting every text
+    # row by url (measured ~half the pipeline wall time). Persist
+    # the slim flags, force them once with a count (no extra text
+    # scan — the join would have computed this branch anyway), and
+    # broadcast-hint when the dup-url set is small (the common
+    # crawl case). Past the threshold it degrades to the same
+    # shuffle join AQE would pick; caller releases the cache via
+    # caching.unpersist_all().
+    from .caching import track_persist
 
-        flags = track_persist(
-            dedup_flags(dedup_scope if dedup_scope is not None else df))
-        n_flag_urls = flags.count()
-        fj = (F.broadcast(flags)
-              if n_flag_urls <= C.BROADCAST_FLAGS_MAX_ROWS else flags)
-        pre = C.FINGERPRINT_COL in df.columns
-        df = (df.join(fj, "url", "left")
-                .withColumn("is_dup_url",
-                            F.coalesce(_dup_pair(pre) > F.col("_min_pair"),
-                                       F.lit(False)))
-                .drop("_min_pair", C.FINGERPRINT_COL))
+    flags = track_persist(
+        dedup_flags(dedup_scope if dedup_scope is not None else df))
+    n_flag_urls = flags.count()
+    fj = (F.broadcast(flags)
+          if n_flag_urls <= C.BROADCAST_FLAGS_MAX_ROWS else flags)
+    pre = C.FINGERPRINT_COL in df.columns
+    df = (df.join(fj, "url", "left")
+            .withColumn("is_dup_url",
+                        F.coalesce(_dup_pair(pre) > F.col("_min_pair"),
+                                   F.lit(False)))
+            .drop("_min_pair", C.FINGERPRINT_COL))
 
     # S3: heuristic/dup/staleness rule booleans (pure Catalyst; exact
     # oracle semantics — empty text suppresses the other heuristics).

@@ -78,29 +78,52 @@ def test_ppl_rounding_stability():
     assert (lm.perplexity(d) == lm.perplexity(d)).all()
 
 
-def test_standalone_udfs_equal_fused(spark, pages_sdf, golden):
-    """The standalone langid/perplexity/scrub pandas UDFs are the
-    unfused regression oracle for the fused models_udf: same scores,
-    byte-identical scrub, same gated perplexity wherever the fused gate
-    evaluated it."""
-    from pyspark.sql import functions as F
-
+def test_fused_udf_equals_direct_calls(pages_input):
+    """The fused models_udf against direct calls of the per-stage
+    functions, in pure pandas: on every document (golden corpus plus
+    None / empty / whitespace-only / NBSP / \\x0b edge docs) the flat
+    LM stream from _batch_stats scores exactly like lm.perplexity's
+    independent Python tokenize path, langid matches score_texts, and
+    the sparse scrub coalesced back to the input equals the dense
+    scrub_series, PII counts included."""
     from dataquality_spark import pipeline
+    from dataquality_spark.functions import scrub
 
-    unfused = pages_sdf.select(
-        "url", "warc_ts",
-        pipeline.langid_udf("text").alias("li"),
-        pipeline.scrub_udf("text").alias("sc"),
-        pipeline.perplexity_udf("text", F.lit(True)).alias("ppl_all"),
-    ).select("url", "warc_ts", "li.lang_pred", "li.lang_score",
-             "sc.text_scrubbed", "ppl_all").toPandas()
-    m = golden.merge(unfused, on=["url", "warc_ts"], suffixes=("_g", "_s"))
-    assert len(m) == len(golden)
-    assert (m.lang_pred_g == m.lang_pred_s).all()
-    assert (m.lang_score_g == m.lang_score_s).all()
-    assert (m.text_scrubbed_g == m.text_scrubbed_s).all()
-    gated = m.ppl.notna()   # golden's ppl has no name collision → no suffix
-    assert (m.loc[gated, "ppl"] == m.loc[gated, "ppl_all"]).all()
+    edges = [None, "", "   \n\t ", "\xa0", "\x0b",
+             "the data\xa0of the value", "the\x0bdata of the value"]
+    text = pd.concat([pages_input["text"], pd.Series(edges)],
+                     ignore_index=True)
+    lang = pd.concat([pages_input["lang"], pd.Series(["en"] * len(edges))],
+                     ignore_index=True)
+
+    want_ppl = lm.perplexity(text)
+    stats = pipeline._batch_stats(text)
+    n_words, ids_flat = stats[0], stats[-1]
+    got_ppl = lm.perplexity_from_flat(ids_flat, n_words)
+    assert np.array_equal(got_ppl, want_ppl, equal_nan=True)
+    # NBSP and \x0b are word characters under the ASCII-whitespace
+    # contract, so only the first three edge docs have no words
+    assert np.isnan(want_ppl[-len(edges):]).tolist() == [
+        True, True, True, False, False, False, False]
+
+    out = pipeline.models_udf.func(text, lang,
+                                   pd.Series([False] * len(text)))
+    pred, score = langid.score_texts(text)
+    assert (out["lang_pred"].to_numpy() == pred).all()
+    assert (out["lang_score"].to_numpy() == score).all()
+
+    gated = out["ppl"].notna().to_numpy()
+    assert 0 < gated.sum() < len(text)
+    assert (out["ppl"][gated].to_numpy(dtype=float)
+            == want_ppl[gated]).all()
+
+    scrubbed, hits = scrub.scrub_series(text)
+    assert list(out["text_scrubbed"].where(out["text_scrubbed"].notna(),
+                                           text)) == list(scrubbed)
+    assert out["text_scrubbed"].notna().any()
+    for kind in ("email", "phone", "ipv4", "toxicity"):
+        assert (out[f"pii_{kind}"].tolist()
+                == [h.get(kind, 0) for h in hits]), kind
 
 
 # ---------------------------------------------------------------------------

@@ -607,29 +607,6 @@ def test_multimodal_features_fixed_match_numpy(spark, docs, docs_pd):
     assert ((norms - 1.0).abs() < 1e-4).all()
 
 
-def test_multimodal_resize_targets(spark, docs):
-    """Aspect-preserving clamp of the longest side; non-images pass
-    through; payload untouched while the decode stays stubbed."""
-    media = multimodal.synthesize_media_from_text(docs, "doc_id", "text")
-    meta = multimodal.extract_metadata(media)
-    joined = media.join(meta.select("media_id", "width", "height"),
-                        "media_id")
-    out = multimodal.resize_images(joined, max_dim=128).toPandas()
-    img = out[out.modality == "image"]
-    assert (np.maximum(img.target_width, img.target_height) <= 128).all()
-    # aspect ratio preserved within integer truncation
-    big = img[np.maximum(img.width, img.height) > 128]
-    assert len(big) > 0
-    ratio_src = big.width / big.height
-    ratio_dst = big.target_width / big.target_height
-    assert (abs(ratio_src - ratio_dst) / ratio_src < 0.05).all()
-    small = img[np.maximum(img.width, img.height) <= 128]
-    assert (small.target_width == small.width).all()
-    non_img = out[out.modality != "image"]
-    assert (non_img.target_width == non_img.width).all()
-    assert (~out.resized).all()        # stub never transcodes
-
-
 @pytest.mark.parametrize("method", ["histogram", "sketch"])
 def test_exact_percentiles_methods_agree(spark, method):
     """Both exact formulations (shuffled histogram ranks vs

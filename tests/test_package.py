@@ -66,3 +66,70 @@ print('ZIPRUN_OK', len(rows))
                        capture_output=True, text=True, timeout=420,
                        env=env)
     assert "ZIPRUN_OK 50" in r.stdout, r.stderr[-3000:]
+
+
+# Shipped modules no entry point imports, each with the reason it stays.
+REACHABILITY_ALLOWLIST = {
+    # The Iceberg DDL for the pages table, used when the Iceberg runtime
+    # jar is on the classpath; the jar is not bundled with this repo.
+    "dataquality_spark.sources.iceberg_spec",
+}
+
+
+def _module_path(name):
+    base = os.path.join(REPO, *name.split("."))
+    for path in (base + ".py", os.path.join(base, "__init__.py")):
+        if os.path.isfile(path):
+            return path
+    return None
+
+
+def _repo_imports(path, modname):
+    """Repo modules `path` imports anywhere in its body (function-local
+    imports included), plus every parent package of each."""
+    import ast
+
+    pkg = modname.split(".")
+    if not path.endswith("__init__.py"):
+        pkg = pkg[:-1]
+    with open(path, encoding="utf-8") as f:
+        tree = ast.parse(f.read())
+    names = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            names.update(a.name for a in node.names)
+        elif isinstance(node, ast.ImportFrom):
+            base = pkg[:len(pkg) - node.level + 1] if node.level else []
+            mod = ".".join(base + ([node.module] if node.module else []))
+            names.add(mod)
+            # `from pkg import sub` imports the submodule `pkg.sub`
+            names.update(f"{mod}.{a.name}" for a in node.names)
+    parts = {".".join(n.split(".")[:i + 1])
+             for n in names for i in range(n.count(".") + 1)}
+    return {m for m in parts if _module_path(m)}
+
+
+def test_every_shipped_module_is_reachable():
+    """Every dataquality_spark module must be transitively imported from
+    a job (jobs/*.py), the contract entry (__spark_entry__.py) or
+    bench.py; a module only tests import is dead weight in the package."""
+    import glob
+
+    todo = set()
+    for path in (glob.glob(os.path.join(REPO, "jobs", "*.py"))
+                 + [os.path.join(REPO, "__spark_entry__.py"),
+                    os.path.join(REPO, "bench.py")]):
+        todo |= _repo_imports(path, os.path.basename(path)[:-3])
+    seen = set()
+    while todo:
+        mod = todo.pop()
+        seen.add(mod)
+        todo |= _repo_imports(_module_path(mod), mod) - seen
+
+    shipped = set()
+    for path in glob.glob(os.path.join(REPO, "dataquality_spark", "**",
+                                       "*.py"), recursive=True):
+        mod = os.path.relpath(path, REPO)[:-3].replace(os.sep, ".")
+        shipped.add(mod.removesuffix(".__init__"))
+    assert sorted(shipped - seen - REACHABILITY_ALLOWLIST) == []
+    assert REACHABILITY_ALLOWLIST <= shipped

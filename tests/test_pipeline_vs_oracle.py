@@ -45,14 +45,27 @@ def test_scores_exact(golden, pages_sdf):
 def test_html_extraction_byte_identity(spark, pages_input):
     """BASELINE.json input_hint: byte-identical extracted text per url.
 
-    Null out the text column and recover it from the html binary."""
+    Null out the text column and recover it from the html binary. One
+    extra page carries invalid UTF-8 (a lone lead byte, a truncated
+    4-byte sequence, an encoded surrogate): extraction must follow
+    Python's errors="replace" — one U+FFFD per maximal invalid subpart,
+    so the surrogate's three bytes give three — which no JVM decode or
+    cast reproduces."""
+    import pandas as pd
     from pyspark.sql import functions as F
 
-    sdf = spark.createDataFrame(pages_input)
+    bad = bytes.fromhex("61C32862F09F9862EDA08063")
+    extra = pages_input.iloc[:1].assign(
+        url="https://invalid-utf8.example.org/1",
+        html=[b"<html><body>" + bad + b"</body></html>"],
+        text="a\ufffd(b\ufffdb\ufffd\ufffd\ufffdc")
+    inp = pd.concat([pages_input, extra], ignore_index=True)
+    sdf = spark.createDataFrame(inp)
     sdf2 = sdf.withColumn("text", F.lit(None).cast("string"))
     got = (pipeline.with_decisions(sdf2, extract_from_html=True)
            .select("url", "warc_ts", "text").toPandas())
-    m = pages_input.merge(got, on=["url", "warc_ts"], suffixes=("_in", "_ex"))
+    m = inp.merge(got, on=["url", "warc_ts"], suffixes=("_in", "_ex"))
+    assert len(m) == len(inp)
     assert (m.text_in == m.text_ex).all()
 
 
