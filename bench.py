@@ -65,20 +65,6 @@ def force(df) -> int:
 
 
 def main() -> None:
-    # SPARK_GRAFT_ONLY="a,b,c": time just that subset and skip the
-    # pipeline/scaling probes — lets a short quiet window on this
-    # shared VM contribute min-merge trials for specific queries
-    # (tools/bench_merge.py) without paying the full ~13-minute line.
-    # Names are checked before Spark starts: a typo must fail loudly,
-    # not time an empty set.
-    only = [t.strip() for t in os.environ.get("SPARK_GRAFT_ONLY",
-                                              "").split(",") if t.strip()]
-    unknown = [t for t in only if t not in HEADLINE]
-    if unknown:
-        sys.exit(f"SPARK_GRAFT_ONLY: unknown headline queries: "
-                 f"{', '.join(unknown)}")
-    headline = [q for q in HEADLINE if q in only] if only else HEADLINE
-
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
@@ -99,9 +85,9 @@ def main() -> None:
     # 1.25-1.9× slower than r03 with none faster — window, not code).
     # Interleaving puts a query's two trials a full set-length (~80 s)
     # apart — the same estimator the committed scaling sweep uses.
-    raw: dict[str, list[float]] = {name: [] for name in headline}
+    raw: dict[str, list[float]] = {name: [] for name in HEADLINE}
     for _pass in range(2):
-        for name in headline:
+        for name in HEADLINE:
             t0 = time.monotonic()
             force(qs[name](spark, sf_dir))
             raw[name].append(time.monotonic() - t0)
@@ -111,16 +97,6 @@ def main() -> None:
     # Webtext pipeline throughput: synthetic pages corpus sized to sf.
     # Big enough that per-job fixed costs don't dominate the docs/sec
     # figure (corpus generation happens driver-side, outside the timing).
-    if only:
-        # subset mode: queries only — one small JSON line, no probes
-        total = round(sum(timings.values()), 2)
-        print(json.dumps({
-            "metric": "headline_subset_total_sec", "value": total,
-            "unit": "sec", "queries": timings, "sf": sf,
-            "cpus": int(cpus), "trials_per_query": 2,
-            "trial_scheme": "interleaved-passes-min"}))
-        return
-
     n_pages = max(int(800_000 * sf), 4_000)
     pages_pd = synth.gen_pages(n_pages, seed=42)[
         ["url", "warc_ts", "html", "text", "lang"]]

@@ -29,15 +29,13 @@ MANIFEST_SCHEMA = StructType([
 ])
 
 
-def read_manifest(spark: SparkSession, manifest_dir: str) -> DataFrame:
-    if os.path.isdir(manifest_dir) and any(
-            f.endswith(".parquet") for f in os.listdir(manifest_dir)):
-        return spark.read.schema(MANIFEST_SCHEMA).parquet(manifest_dir)
-    return spark.createDataFrame([], MANIFEST_SCHEMA)
-
-
 def completed_partitions(spark: SparkSession, manifest_dir: str) -> list[str]:
-    m = read_manifest(spark, manifest_dir)
+    """Partition ids the manifest marks done; no Spark job when the
+    manifest directory holds no parquet yet (a first run)."""
+    if not (os.path.isdir(manifest_dir) and any(
+            f.endswith(".parquet") for f in os.listdir(manifest_dir))):
+        return []
+    m = spark.read.schema(MANIFEST_SCHEMA).parquet(manifest_dir)
     return [r.partition_id for r in
             m.filter(F.col("status") == "done")
              .select("partition_id").distinct().collect()]

@@ -61,12 +61,15 @@ def test_profile_table_repetition_pillar(spark):
     assert "n_docs_dup_lines_gt_30pct" in rep
 
 
-def test_run_pipeline_and_resume(spark, pages_dir, tmp_path):
+def test_run_pipeline_and_resume(spark, pages_dir, tmp_path, capsys):
     from jobs import run_pipeline
 
     out = str(tmp_path / "out")
     first = run_pipeline.run(["--input", pages_dir, "--output", out])
     assert first["n_docs"] == 400 and first["skipped_partitions"] == 0
+    # the run summary is the job's last stdout line, as one JSON object
+    line = capsys.readouterr().out.strip().splitlines()[-1]
+    assert json.loads(line) == first
     decisions = spark.read.parquet(os.path.join(out, "decisions"))
     assert decisions.count() == 400
     # second run: manifest resume skips everything

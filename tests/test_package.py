@@ -133,3 +133,25 @@ def test_every_shipped_module_is_reachable():
         shipped.add(mod.removesuffix(".__init__"))
     assert sorted(shipped - seen - REACHABILITY_ALLOWLIST) == []
     assert REACHABILITY_ALLOWLIST <= shipped
+
+
+def test_every_tool_is_documented_or_imported():
+    """Every tools/*.py must be named in README.md or imported by
+    bench.py or a test; an unlisted, unimported tool is a stray probe."""
+    import glob
+
+    with open(os.path.join(REPO, "README.md"), encoding="utf-8") as f:
+        readme = f.read()
+    imported = set()
+    for path in ([os.path.join(REPO, "bench.py")]
+                 + glob.glob(os.path.join(REPO, "tests", "*.py"))):
+        imported |= _repo_imports(path, os.path.basename(path)[:-3])
+    stray = []
+    for path in glob.glob(os.path.join(REPO, "tools", "*.py")):
+        name = os.path.basename(path)[:-3]
+        if name == "__init__":
+            continue
+        if (f"tools/{name}.py" not in readme
+                and f"tools.{name}" not in imported):
+            stray.append(name)
+    assert sorted(stray) == []

@@ -2,8 +2,12 @@
 efficiency ≥0.8 from N to 4N executors, proxied in-sandbox by local[N]
 vs local[4N] on the SAME input).
 
-    python tools/scaling_bench.py [--n-docs 60000] [--sizes 8,32]
+    python tools/scaling_bench.py [--n-docs 60000] [--sizes N,4N]
         [--trials 3] [--alternate N] [--fit] [--out BENCH/scaling.json]
+
+The default sizes are N = max(1, cpus // 4) and 4N, where cpus is
+$SPARK_GRAFT_CPUS (fallback: all cores), so the high size never asks for
+more slots than the host has.
 
 Writes the corpus once (64 parquet splits so every size sees identical
 input parallelism), then times in a fresh subprocess per cluster size
@@ -117,7 +121,7 @@ from dataquality_spark import pipeline, synth
 from dataquality_spark.session import get_spark
 pages = synth.gen_pages({n_docs}, seed=42)[
     ["url", "warc_ts", "html", "text", "lang"]]
-spark = get_spark("synth", master="local[16]")
+spark = get_spark("synth")
 spark.sparkContext.setLogLevel("ERROR")
 df = spark.createDataFrame(pages)
 {wrap}.repartition(64).write.mode("overwrite").parquet({out_dir!r})
@@ -238,9 +242,11 @@ def amdahl_fit(summary: dict) -> dict:
 
 
 def main() -> None:
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+    n = max(1, cpus // 4)
     ap = argparse.ArgumentParser()
     ap.add_argument("--n-docs", type=int, default=60_000)
-    ap.add_argument("--sizes", default="8,32",
+    ap.add_argument("--sizes", default=f"{n},{4 * n}",
                     help="comma-separated core counts (first=low, last=high)")
     ap.add_argument("--input", default=None,
                     help="existing pages parquet dir (else synthesized)")
