@@ -24,44 +24,30 @@ from . import config as C
 COMPLETENESS_COLUMNS = ["url", "warc_ts", "text", "lang"]
 
 
-def audit_metrics(enriched: DataFrame,
-                  approx_distinct: bool = False) -> DataFrame:
+def audit_metrics(enriched: DataFrame) -> DataFrame:
     """One audit row per partition_id from the with_decisions() frame.
 
-    `approx_distinct=True` switches distinct-url counting to HLL
-    (approx_count_distinct) — the 10^12-doc setting where exact
-    count_distinct would add an extra expand/shuffle.
-    """
-    pid = C.PARTITION_COL
-    distinct_urls = (F.approx_count_distinct("url") if approx_distinct
-                     else F.count_distinct("url"))
+    rule_hit_counts sums one `array_contains` per rule — exact because
+    `rule_hits` lists a rule at most once (pipeline.assemble_rules) — keyed
+    in sorted(config.ALL_RULES) order, zero-hit rules dropped."""
+    rules = sorted(C.ALL_RULES)
     completeness = [
         F.round(F.count(c).cast("double") / F.count(F.lit(1)),
                 C.SCORE_DECIMALS).alias(f"completeness_{c}")
-        for c in COMPLETENESS_COLUMNS if c in enriched.columns
+        for c in COMPLETENESS_COLUMNS
     ]
-    base = enriched.groupBy(pid).agg(
+    hit_counts = F.map_from_arrays(
+        F.array(*[F.lit(r) for r in rules]),
+        F.array(*[F.sum(F.array_contains("rule_hits", r).cast("long"))
+                  for r in rules]))
+    return enriched.groupBy(C.PARTITION_COL).agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(F.col("keep").cast("long")).alias("n_kept"),
-        distinct_urls.alias("n_distinct_urls"),
+        F.count_distinct("url").alias("n_distinct_urls"),
         F.sum("pii_email").cast("long").alias("n_pii_email"),
         F.sum("pii_phone").cast("long").alias("n_pii_phone"),
         F.sum("pii_ipv4").cast("long").alias("n_pii_ipv4"),
         F.sum("pii_toxicity").cast("long").alias("n_pii_toxicity"),
         *completeness,
+        F.map_filter(hit_counts, lambda _, v: v > 0).alias("rule_hit_counts"),
     )
-
-    # rule_hit_counts map: explode → count → deterministic sorted map.
-    hits = (enriched
-            .select(pid, F.explode("rule_hits").alias("rule"))
-            .groupBy(pid, "rule").agg(F.count(F.lit(1)).alias("n"))
-            .groupBy(pid)
-            .agg(F.map_from_entries(
-                F.sort_array(F.collect_list(F.struct("rule", "n"))))
-                .alias("rule_hit_counts")))
-
-    return base.join(hits, pid, "left").withColumn(
-        "rule_hit_counts",
-        F.coalesce("rule_hit_counts",
-                   F.map_from_arrays(F.array().cast("array<string>"),
-                                     F.array().cast("array<bigint>"))))

@@ -12,8 +12,8 @@ makes re-processing a partition idempotent.
 
 from __future__ import annotations
 
-import os
-
+import pandas as pd
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (LongType, StringType, StructField, StructType,
@@ -30,12 +30,14 @@ MANIFEST_SCHEMA = StructType([
 
 
 def completed_partitions(spark: SparkSession, manifest_dir: str) -> list[str]:
-    """Partition ids the manifest marks done; no Spark job when the
-    manifest directory holds no parquet yet (a first run)."""
-    if not (os.path.isdir(manifest_dir) and any(
-            f.endswith(".parquet") for f in os.listdir(manifest_dir))):
-        return []
-    m = spark.read.schema(MANIFEST_SCHEMA).parquet(manifest_dir)
+    """Partition ids the manifest marks done; [] only when the manifest
+    path does not exist yet (a first run) — any other read error raises."""
+    try:
+        m = spark.read.schema(MANIFEST_SCHEMA).parquet(manifest_dir)
+    except AnalysisException as e:
+        if e.getCondition() == "PATH_NOT_FOUND":
+            return []
+        raise
     return [r.partition_id for r in
             m.filter(F.col("status") == "done")
              .select("partition_id").distinct().collect()]
@@ -57,7 +59,8 @@ def record_done(spark: SparkSession, manifest_dir: str,
     """Append manifest rows: [(partition_id, output_rows)]."""
     if not rows:
         return
-    df = spark.createDataFrame(
-        [(pid, "done", completed_at, n) for pid, n in rows],
-        schema=MANIFEST_SCHEMA)
+    ts = completed_at.astimezone()   # a naive datetime means local time
+    pdf = pd.DataFrame([(pid, "done", ts, n) for pid, n in rows],
+                       columns=MANIFEST_SCHEMA.names)
+    df = spark.createDataFrame(pdf, schema=MANIFEST_SCHEMA)
     df.coalesce(1).write.mode("append").parquet(manifest_dir)

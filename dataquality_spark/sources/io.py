@@ -15,9 +15,11 @@ never inference, and fail fast on drift (pipeline.assert_schema).
 
 from __future__ import annotations
 
+import datetime
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (BinaryType, LongType, StringType,
+from pyspark.sql.types import (BinaryType, DoubleType, LongType, StringType,
                                StructField, StructType, TimestampType)
 
 from .. import config as C
@@ -154,8 +156,25 @@ def write_decisions(decisions: DataFrame, out_dir: str) -> None:
      .parquet(out_dir))
 
 
-def append_audit(audit_df: DataFrame, out_dir: str) -> None:
-    audit_df.coalesce(1).write.mode("append").parquet(out_dir)
+def append_audit(audit_df: DataFrame, out_dir: str,
+                 finished_at: datetime.datetime, elapsed_s: float):
+    """Collect the audit rows once (Arrow), stamp the job's wall clock
+    (`elapsed_s` up to `finished_at`) on each, append them to `out_dir`
+    and return them as pandas; no rows, no write."""
+    rows = audit_df.toPandas()
+    if rows.empty:
+        return rows
+    finished_at = finished_at.astimezone()
+    rows["started_at"] = finished_at - datetime.timedelta(seconds=elapsed_s)
+    rows["finished_at"] = finished_at
+    rows["docs_per_sec"] = round(rows.n_docs.sum() / max(elapsed_s, 1e-9), 3)
+    schema = StructType(audit_df.schema.fields + [
+        StructField("started_at", TimestampType(), False),
+        StructField("finished_at", TimestampType(), False),
+        StructField("docs_per_sec", DoubleType(), False)])
+    (audit_df.sparkSession.createDataFrame(rows, schema=schema)
+     .coalesce(1).write.mode("append").parquet(out_dir))
+    return rows
 
 
 def write_bucketed(df: DataFrame, table_name: str, bucket_col: str,

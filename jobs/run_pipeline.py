@@ -3,13 +3,14 @@
     spark-submit --py-files dq.zip jobs/run_pipeline.py \
         --input /data/pages.parquet --output /data/out \
         [--max-partitions K] [--no-resume] [--extract-html] \
-        [--approx-distinct] [--repartition N]
+        [--lenient-schema] [--previous DIR] [--repartition N]
 
 Lifecycle (SURVEY.md §3 new-engine equivalent): config → read pages with
 fixed schema → resume anti-join against the processed-partition manifest →
 optional salted repartition → decision pipeline → dynamic-partition-
-overwrite decisions write → audit rows (+ wall-clock throughput from
-time.monotonic) → manifest append.
+overwrite decisions write → one audit aggregate, collected once through
+Arrow (at most one row per month partition) and appended with the job's
+wall clock → manifest rows and run summary built from those same rows.
 """
 
 from __future__ import annotations
@@ -66,7 +67,6 @@ def _run(argv: list[str] | None = None) -> dict:
                          "urls carry their previous run's decisions "
                          "forward, which is sound because identical "
                          "bytes yield the identical decision")
-    ap.add_argument("--approx-distinct", action="store_true")
     ap.add_argument("--repartition", type=int, default=None,
                     help="salted (host, salt) repartition width")
     ap.add_argument("--master", default=None)
@@ -127,31 +127,19 @@ def _run(argv: list[str] | None = None) -> dict:
     io.write_decisions(decisions_df, decisions_dir)
 
     elapsed = time.monotonic() - t0
-    per_part = (enriched.groupBy(C.PARTITION_COL)
-                .agg(F.count(F.lit(1)).alias("n")).collect())
-    n_docs = sum(r.n for r in per_part)
-
     # wall-clock allowed at runtime (audit metadata, not data logic)
     finished = datetime.datetime.now()
-
-    audit_df = (audit.audit_metrics(enriched,
-                                    approx_distinct=args.approx_distinct)
-                .withColumn("started_at",
-                            F.lit(finished - datetime.timedelta(
-                                seconds=elapsed)))
-                .withColumn("finished_at", F.lit(finished))
-                .withColumn("docs_per_sec",
-                            F.lit(round(n_docs / max(elapsed, 1e-9), 3))))
-    io.append_audit(audit_df, audit_dir)
-
+    rows = io.append_audit(audit.audit_metrics(enriched), audit_dir,
+                           finished, elapsed)
+    n_docs = int(rows.n_docs.sum())
     resume.record_done(spark, manifest_dir,
-                       [(r[C.PARTITION_COL], r.n) for r in per_part],
+                       list(zip(rows[C.PARTITION_COL], rows.n_docs)),
                        finished)
     enriched.unpersist()
     from dataquality_spark.caching import unpersist_all
     unpersist_all()  # release the dedup-flags cache
 
-    stats = {"n_docs": n_docs, "n_partitions": len(per_part),
+    stats = {"n_docs": n_docs, "n_partitions": len(rows),
              "elapsed_sec": round(elapsed, 3),
              "docs_per_sec": round(n_docs / max(elapsed, 1e-9), 1),
              "skipped_partitions": len(done)}

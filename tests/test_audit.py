@@ -39,7 +39,13 @@ def test_audit_distinct_urls(pages_sdf):
 
 def test_audit_one_row_per_partition(pages_sdf):
     enriched = pipeline.with_decisions(pages_sdf)
-    a = audit.audit_metrics(enriched).toPandas()
+    agg = audit.audit_metrics(enriched)
+    # one hash aggregate: no explode (Generate), no join of its own
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+    assert "Generate" not in plan(agg)
+    assert plan(agg).count("Join") == plan(enriched).count("Join")
+    a = agg.toPandas()
     n_parts = enriched.select(C.PARTITION_COL).distinct().count()
     assert len(a) == n_parts
     assert a[C.PARTITION_COL].is_unique

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 import os
 
 import pandas as pd
+import pyarrow.parquet as pq
 import pytest
 
 from dataquality_spark import synth
@@ -61,6 +62,18 @@ def test_profile_table_repetition_pillar(spark):
     assert "n_docs_dup_lines_gt_30pct" in rep
 
 
+AUDIT_COLUMNS = [
+    ("partition_id", "string"), ("n_docs", "bigint"), ("n_kept", "bigint"),
+    ("n_distinct_urls", "bigint"), ("n_pii_email", "bigint"),
+    ("n_pii_phone", "bigint"), ("n_pii_ipv4", "bigint"),
+    ("n_pii_toxicity", "bigint"), ("completeness_url", "double"),
+    ("completeness_warc_ts", "double"), ("completeness_text", "double"),
+    ("completeness_lang", "double"),
+    ("rule_hit_counts", "map<string,bigint>"),
+    ("started_at", "timestamp"), ("finished_at", "timestamp"),
+    ("docs_per_sec", "double")]
+
+
 def test_run_pipeline_and_resume(spark, pages_dir, tmp_path, capsys):
     from jobs import run_pipeline
 
@@ -72,6 +85,21 @@ def test_run_pipeline_and_resume(spark, pages_dir, tmp_path, capsys):
     assert json.loads(line) == first
     decisions = spark.read.parquet(os.path.join(out, "decisions"))
     assert decisions.count() == 400
+    # the audit and manifest tables: one row per partition, built from
+    # the same per-partition counts
+    audit_dir = os.path.join(out, "audit")
+    assert spark.read.parquet(audit_dir).dtypes == AUDIT_COLUMNS
+    aud = pq.read_table(audit_dir)   # maps in their stored key order
+    hits = aud.column("rule_hit_counts").to_pylist()
+    assert all([k for k, _ in m] == sorted(k for k, _ in m) for m in hits)
+    a = aud.drop(["rule_hit_counts"]).to_pandas()
+    assert a.partition_id.is_unique and len(a) == first["n_partitions"]
+    assert a.n_docs.sum() == first["n_docs"]
+    man = pq.read_table(os.path.join(out, "manifests")).to_pandas()
+    j = a.merge(man, on="partition_id", validate="one_to_one")
+    assert len(j) == len(a) == len(man)
+    assert (j.output_rows == j.n_docs).all()
+    assert (j.completed_at == j.finished_at).all()
     # second run: manifest resume skips everything
     second = run_pipeline.run(["--input", pages_dir, "--output", out])
     assert second["n_docs"] == 0

@@ -59,10 +59,13 @@ def test_partial_then_resume_equals_single_run(spark, corpus_dir, tmp_path):
     assert (mf.c == 1).all()
 
 
-def test_rerun_is_noop(spark, corpus_dir, tmp_path):
+@pytest.mark.parametrize("uri", [False, True], ids=["path", "uri"])
+def test_rerun_is_noop(spark, corpus_dir, tmp_path, uri):
     inp = os.path.join(corpus_dir, "pages.parquet")
     out = str(tmp_path / "noop")
-    run_pipeline.run(["--input", inp, "--output", out])
-    s = run_pipeline.run(["--input", inp, "--output", out])
+    target = f"file://{out}" if uri else out
+    run_pipeline.run(["--input", inp, "--output", target])
+    s = run_pipeline.run(["--input", inp, "--output", target])
     assert s["n_docs"] == 0
+    assert s["skipped_partitions"] > 0
     assert len(_read_decisions(out)) == 800
